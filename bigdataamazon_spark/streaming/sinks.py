@@ -2,22 +2,39 @@
 
 The standard streaming-CDC pattern: each micro-batch is a change set,
 MERGEd into the serving snapshot by key — exactly-once *effect* on top
-of Spark's at-least-once foreachBatch, because the merge is idempotent
-per key (replaying a batch re-applies the same rows to the same keys).
+of Spark's at-least-once foreachBatch.
+
+- **One execution per micro-batch.** The batch frame is a scan over the
+  stream's (often stateful) plan, so every action on it re-runs that
+  plan and reloads and recommits its state store. The sink reduces the
+  batch to one winner per key, persists that, and materializes it with
+  a single ``count()``; the merge then reads the persisted rows. A
+  batch with no rows (e.g. a no-data batch that only evicts watermark
+  state) stops there: the snapshot is neither read nor rewritten.
+- **Epoch guard.** Each epoch writes ``v{epoch}`` and then swaps the
+  ``_CURRENT`` pointer to it. A replay of the epoch the pointer already
+  names (a crash between the swap and Spark's offset commit) is already
+  applied and returns without writing; any other replay re-merges, which
+  is idempotent per key because ``order_col`` decides between rows, so
+  reordered or replayed batches cannot regress the snapshot.
+- **Two-version retention.** After the swap, every version directory
+  except the new one and the one it replaced is deleted, so a reader
+  that opened the previous version keeps working while disk use stays
+  at about two snapshots.
 
 Plain parquet has no transactional commit, so the snapshot swap here is
 write-to-versioned-dir + pointer file; on a cluster you'd hand the same
-``merge_upsert`` plan to a table format (Delta/Iceberg/Hudi) whose
-commit protocol makes the swap atomic across writers. The merge plan —
-snapshot never shuffles, change keys broadcast — is the same shape as
-the batch op ``operators/relational.merge_upsert``, plus per-key
-``order_col`` arbitration so reordered/replayed batches cannot regress
-the snapshot.
+merge plan to a table format (Delta/Iceberg/Hudi) whose commit protocol
+makes the swap atomic across writers. The merge plan — snapshot never
+shuffles, change keys broadcast — is the same shape as the batch op
+``operators/relational.merge_upsert``, plus per-key ``order_col``
+arbitration.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -66,27 +83,39 @@ def upsert_batch(
         batch.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
+        .persist()
     )
-    current = read_snapshot(spark, snapshot_dir)
-    if current is None:
-        merged = latest
-    else:
-        keys = latest.select(*key_cols).distinct()
-        touched = current.join(F.broadcast(keys), key_cols, "left_semi")
-        winners = (
-            touched.unionByName(latest)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        untouched = current.join(F.broadcast(keys), key_cols, "left_anti")
-        merged = untouched.unionByName(winners)
-    version = f"v{epoch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(snapshot_dir, version))
+    try:
+        # the one execution of the batch's plan (and its state commit)
+        if latest.count() == 0:
+            return
+        version = f"v{epoch_id}"
+        previous = _current_version(snapshot_dir)
+        if previous == version:
+            return  # replay of the epoch the pointer already names
+        if previous is None:
+            merged = latest
+        else:
+            current = spark.read.parquet(os.path.join(snapshot_dir, previous))
+            keys = F.broadcast(latest.select(*key_cols))  # one row per key
+            winners = (
+                current.join(keys, key_cols, "left_semi")
+                .unionByName(latest)
+                .withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .drop("_rn")
+            )
+            merged = current.join(keys, key_cols, "left_anti").unionByName(winners)
+        merged.write.mode("overwrite").parquet(os.path.join(snapshot_dir, version))
+    finally:
+        latest.unpersist()
     tmp = os.path.join(snapshot_dir, _POINTER + ".tmp")
     with open(tmp, "w") as f:
         f.write(version)
     os.replace(tmp, os.path.join(snapshot_dir, _POINTER))
+    for d in os.listdir(snapshot_dir):
+        if d[:1] == "v" and d[1:].isdigit() and d not in (version, previous):
+            shutil.rmtree(os.path.join(snapshot_dir, d), ignore_errors=True)
 
 
 def stream_upsert_sink(

@@ -27,6 +27,9 @@ import pandas as pd
 
 from bigdataamazon_spark.catalog import TABLES, table_path
 
+# compare() runs from test_parity_all's thread pool of this many workers
+POOL_WORKERS = int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS", "6"))
+
 
 def _normalize(df: pd.DataFrame) -> tuple[list[str], list[tuple[str, ...]]]:
     cols = sorted(df.columns)
@@ -37,10 +40,13 @@ def _normalize(df: pd.DataFrame) -> tuple[list[str], list[tuple[str, ...]]]:
 
 def run_duckdb(sql: str, sf_dir: str) -> pd.DataFrame:
     con = duckdb.connect()
-    # compare() may run from a small thread pool (test_parity_all);
-    # bound each connection's own pool so N concurrent oracles don't
-    # oversubscribe the box N*ncpu ways. Result-neutral.
-    con.execute("SET threads TO 8")
+    # bound each connection so POOL_WORKERS concurrent oracles neither
+    # oversubscribe the cores nor, at DuckDB's default of 80 % of RAM
+    # each, exhaust the memory they share with the Spark JVM: together
+    # they get half of physical memory. Result-neutral.
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con.execute(f"SET memory_limit = '{phys // 2 // POOL_WORKERS >> 20}MB'")
+    con.execute(f"SET threads TO {min(8, len(os.sched_getaffinity(0)))}")
     for t in TABLES:
         p = table_path(sf_dir, t)
         if os.path.exists(p):

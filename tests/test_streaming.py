@@ -340,6 +340,123 @@ def test_upsert_batch_out_of_order_never_regresses(spark):
         shutil.rmtree(snap_dir, ignore_errors=True)
 
 
+def _kv_batch(spark, rows):
+    return spark.createDataFrame(rows, "k bigint, ts timestamp, v string")
+
+
+def test_upsert_batch_replayed_epoch_leaves_snapshot_unchanged(spark):
+    """A crash between the pointer swap and the offset commit replays the
+    epoch the pointer already names; the replay must be a no-op, not an
+    overwrite of the version the merge is reading."""
+    import datetime
+    import os
+
+    from bigdataamazon_spark.streaming.sinks import read_snapshot, upsert_batch
+
+    snap_dir = tempfile.mkdtemp(prefix="snap_replay_")
+    try:
+        t = datetime.datetime(2024, 1, 1, 12, 0, 0)
+        b0 = _kv_batch(spark, [(1, t, "a"), (2, t, "b")])
+        b1 = _kv_batch(spark, [(2, t + datetime.timedelta(hours=1), "b2"), (3, t, "c")])
+        upsert_batch(b0, snap_dir, ["k"], "ts", 0)
+        upsert_batch(b1, snap_dir, ["k"], "ts", 1)
+        before = sorted(read_snapshot(spark, snap_dir).collect())
+        upsert_batch(b1, snap_dir, ["k"], "ts", 1)
+        assert sorted(read_snapshot(spark, snap_dir).collect()) == before
+        assert {(r.k, r.v) for r in before} == {(1, "a"), (2, "b2"), (3, "c")}
+        with open(os.path.join(snap_dir, "_CURRENT")) as f:
+            assert f.read() == "v1"
+    finally:
+        shutil.rmtree(snap_dir, ignore_errors=True)
+
+
+def test_upsert_batch_retains_two_versions(spark):
+    """Superseded snapshot versions are deleted after each swap: at most
+    the current version and the one it replaced remain, and the snapshot
+    still equals batch last-writer-wins over every micro-batch."""
+    import datetime
+    import os
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from bigdataamazon_spark.streaming.sinks import read_snapshot, upsert_batch
+
+    snap_dir = tempfile.mkdtemp(prefix="snap_retain_")
+    try:
+        t = datetime.datetime(2024, 1, 1, 12, 0, 0)
+        batches = [
+            _kv_batch(spark, [(k, t + datetime.timedelta(minutes=e * 10 + k), f"e{e}k{k}")
+                              for k in range(e, e + 3)])
+            for e in range(4)
+        ]
+        for epoch, b in enumerate(batches):
+            upsert_batch(b, snap_dir, ["k"], "ts", epoch)
+        versions = [d for d in os.listdir(snap_dir) if d.startswith("v")]
+        assert len(versions) <= 2, versions
+        everything = batches[0]
+        for b in batches[1:]:
+            everything = everything.unionByName(b)
+        w = Window.partitionBy("k").orderBy(F.desc("ts"), F.desc("v"))
+        want = everything.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+        assert sorted(read_snapshot(spark, snap_dir).collect()) == sorted(want.collect())
+    finally:
+        shutil.rmtree(snap_dir, ignore_errors=True)
+
+
+def test_upsert_batch_empty_batch_writes_nothing(spark):
+    """A micro-batch with no rows (a no-data batch that only evicts
+    watermark state) neither reads nor rewrites the snapshot."""
+    import datetime
+    import os
+
+    from bigdataamazon_spark.streaming.sinks import upsert_batch
+
+    snap_dir = tempfile.mkdtemp(prefix="snap_empty_")
+    try:
+        t = datetime.datetime(2024, 1, 1, 12, 0, 0)
+        upsert_batch(_kv_batch(spark, [(1, t, "a")]), snap_dir, ["k"], "ts", 0)
+        upsert_batch(_kv_batch(spark, []), snap_dir, ["k"], "ts", 1)
+        assert sorted(os.listdir(snap_dir)) == ["_CURRENT", "v0"]
+    finally:
+        shutil.rmtree(snap_dir, ignore_errors=True)
+
+
+def test_upsert_sink_runs_dedup_state_once_per_batch(spark, events_dir, tmp_path):
+    """Each micro-batch executes the stream's stateful plan once: the
+    dedup operator's state-row metric never exceeds the distinct event
+    ids read. Every extra action on the batch frame re-runs the operator
+    and adds its rows to the metric again."""
+    import json
+
+    from bigdataamazon_spark.streaming.sinks import stream_upsert_sink
+    from bigdataamazon_spark.streaming.stateful import stream_dedup_events
+    from bigdataamazon_spark.streaming.windows import EVENT_SCHEMA
+
+    src = str(tmp_path / "src")
+    events = spark.read.parquet(events_dir)
+    events.repartition(3).write.parquet(src)  # three data micro-batches
+    stream = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
+    # a watermark longer than the data's span keeps every id in state
+    q = stream_upsert_sink(
+        stream_dedup_events(stream, watermark="60 days"),
+        str(tmp_path / "snapshot"),
+        ["user_id"],
+        "ts",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        query_name="upsert_once",
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    progress = [json.loads(p.json) for p in q.recentProgress]
+    state_rows = [p["stateOperators"][0]["numRowsTotal"] for p in progress if p.get("stateOperators")]
+    n_ids = events.select("event_id").distinct().count()
+    assert len(state_rows) >= 3 and max(state_rows) <= n_ids, (state_rows, n_ids)
+    assert state_rows[-1] == n_ids
+
+
 def test_stream_static_broadcast_enrichment(spark, sf_dir, events_dir):
     """Stream-static join: a streaming fact leg enriched by a static
     (broadcastable) dimension — no watermark needed on the static side,
