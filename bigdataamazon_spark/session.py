@@ -10,8 +10,9 @@ but every knob is chosen to also be the right call on a real cluster:
 - Arrow on for any pandas_udf / toPandas hop.
 - session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle (and are deployment-independent).
-- driver heap a quarter of physical memory, capped at 16g, so the one
-  local JVM cannot outgrow the host (``SPARK_GRAFT_DRIVER_MEM`` overrides).
+- driver heap a quarter of physical memory (host RAM or the cgroup
+  limit, whichever is lower), capped at 16g, so the one local JVM cannot
+  outgrow its machine (``SPARK_GRAFT_DRIVER_MEM`` overrides).
 - the package's parent directory on the Python workers' ``PYTHONPATH``,
   so engine code shipped into UDFs imports from any working directory.
 """
@@ -29,10 +30,27 @@ def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def physical_memory_bytes() -> int:
+    """Host RAM, or this process's cgroup memory limit if that is lower."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):  # absent, unreadable, or "max"
+            pass
+    return min(limits)
+
+
 def default_driver_memory() -> str:
     """A quarter of physical memory, capped at 16g."""
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{min(phys // 4, 16 << 30) >> 20}m"
+    return f"{min(physical_memory_bytes() // 4, 16 << 30) >> 20}m"
 
 
 def _export_package_path() -> None:

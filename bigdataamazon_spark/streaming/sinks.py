@@ -10,13 +10,19 @@ of Spark's at-least-once foreachBatch.
   batch to one winner per key, persists that, and materializes it with
   a single ``count()``; the merge then reads the persisted rows. A
   batch with no rows (e.g. a no-data batch that only evicts watermark
-  state) stops there: the snapshot is neither read nor rewritten.
+  state) stops there: the snapshot is neither read nor rewritten. Only
+  when no snapshot exists yet does an empty batch write an empty one.
 - **Epoch guard.** Each epoch writes ``v{epoch}`` and then swaps the
-  ``_CURRENT`` pointer to it. A replay of the epoch the pointer already
-  names (a crash between the swap and Spark's offset commit) is already
-  applied and returns without writing; any other replay re-merges, which
-  is idempotent per key because ``order_col`` decides between rows, so
-  reordered or replayed batches cannot regress the snapshot.
+  ``_CURRENT`` pointer to it; the pointer also records the streaming
+  query's id, which stays the same across restarts from one checkpoint.
+  A replay by that query of the epoch the pointer names (a crash between
+  the swap and Spark's offset commit) is already applied and returns
+  without writing; any other replay re-merges, which is idempotent per
+  key because ``order_col`` decides between rows, so reordered or
+  replayed batches cannot regress the snapshot. A snapshot dir belongs
+  to one checkpoint: another query that reaches the epoch the pointer
+  names raises instead of dropping its batch or overwriting the version
+  it reads.
 - **Two-version retention.** After the swap, every version directory
   except the new one and the one it replaced is deleted, so a reader
   that opened the previous version keeps working while disk use stays
@@ -43,16 +49,20 @@ from pyspark.sql import Window
 _POINTER = "_CURRENT"
 
 
-def _current_version(snapshot_dir: str) -> str | None:
+def _read_pointer(snapshot_dir: str) -> tuple[str | None, str]:
+    """The current version and the id of the query that wrote it
+    (empty when it was written outside a stream)."""
     p = os.path.join(snapshot_dir, _POINTER)
     if not os.path.exists(p):
-        return None
+        return None, ""
     with open(p) as f:
-        return f.read().strip() or None
+        version, _, query_id = f.read().strip().partition("\n")
+    return version or None, query_id
 
 
 def read_snapshot(spark, snapshot_dir: str) -> DataFrame | None:
-    v = _current_version(snapshot_dir)
+    """The current snapshot; None until the first batch is applied."""
+    v = _read_pointer(snapshot_dir)[0]
     if v is None:
         return None
     return spark.read.parquet(os.path.join(snapshot_dir, v))
@@ -76,6 +86,10 @@ def upsert_batch(
     snapshot is never shuffled no matter its size.
     """
     spark = batch.sparkSession
+    # set on the thread that runs a streaming query's batches
+    query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId") or ""
+    version = f"v{epoch_id}"
+    previous, owner = _read_pointer(snapshot_dir)
     w = Window.partitionBy(*key_cols).orderBy(
         F.desc(order_col), *[F.desc(c) for c in batch.columns if c != order_col]
     )
@@ -87,12 +101,14 @@ def upsert_batch(
     )
     try:
         # the one execution of the batch's plan (and its state commit)
-        if latest.count() == 0:
-            return
-        version = f"v{epoch_id}"
-        previous = _current_version(snapshot_dir)
+        empty = latest.count() == 0
+        if previous is not None and (empty or (previous, owner) == (version, query_id)):
+            return  # nothing to merge, or a replay of the epoch already applied
         if previous == version:
-            return  # replay of the epoch the pointer already names
+            raise RuntimeError(
+                f"{snapshot_dir}: {version} was written by query {owner or '(none)'}, "
+                f"not {query_id or '(none)'}; a snapshot dir belongs to one checkpoint"
+            )
         if previous is None:
             merged = latest
         else:
@@ -111,7 +127,7 @@ def upsert_batch(
         latest.unpersist()
     tmp = os.path.join(snapshot_dir, _POINTER + ".tmp")
     with open(tmp, "w") as f:
-        f.write(version)
+        f.write(f"{version}\n{query_id}" if query_id else version)
     os.replace(tmp, os.path.join(snapshot_dir, _POINTER))
     for d in os.listdir(snapshot_dir):
         if d[:1] == "v" and d[1:].isdigit() and d not in (version, previous):

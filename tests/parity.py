@@ -26,9 +26,16 @@ import duckdb
 import pandas as pd
 
 from bigdataamazon_spark.catalog import TABLES, table_path
+from bigdataamazon_spark.session import physical_memory_bytes
 
-# compare() runs from test_parity_all's thread pool of this many workers
-POOL_WORKERS = int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS", "6"))
+# One database for every oracle, so the bound is on their total: compare()
+# runs from test_parity_all's thread pool, and at DuckDB's default of 80 %
+# of RAM per connection concurrent oracles and the Spark JVM can exhaust
+# the host. Half of physical memory, and one pool of at most 8 threads
+# shared by all of them. Result-neutral.
+_DB = duckdb.connect()
+_DB.execute(f"SET memory_limit = '{physical_memory_bytes() // 2 >> 20}MB'")
+_DB.execute(f"SET threads TO {min(8, len(os.sched_getaffinity(0)))}")
 
 
 def _normalize(df: pd.DataFrame) -> tuple[list[str], list[tuple[str, ...]]]:
@@ -39,20 +46,14 @@ def _normalize(df: pd.DataFrame) -> tuple[list[str], list[tuple[str, ...]]]:
 
 
 def run_duckdb(sql: str, sf_dir: str) -> pd.DataFrame:
-    con = duckdb.connect()
-    # bound each connection so POOL_WORKERS concurrent oracles neither
-    # oversubscribe the cores nor, at DuckDB's default of 80 % of RAM
-    # each, exhaust the memory they share with the Spark JVM: together
-    # they get half of physical memory. Result-neutral.
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    con.execute(f"SET memory_limit = '{phys // 2 // POOL_WORKERS >> 20}MB'")
-    con.execute(f"SET threads TO {min(8, len(os.sched_getaffinity(0)))}")
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    # the driver's fetch path: .df(), NOT fetchall — HUGEINT → float64
-    return con.execute(sql).df()
+    # a cursor per oracle: its own temp views, the shared memory budget
+    with _DB.cursor() as con:
+        for t in TABLES:
+            p = table_path(sf_dir, t)
+            if os.path.exists(p):
+                con.execute(f"CREATE TEMP VIEW {t} AS SELECT * FROM '{p}'")
+        # the driver's fetch path: .df(), NOT fetchall — HUGEINT → float64
+        return con.execute(sql).df()
 
 
 def compare(

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from bigdataamazon_spark import queries as registry
-from tests.parity import POOL_WORKERS, compare
+from tests.parity import compare
 
 
 def _names():
@@ -59,7 +59,10 @@ def parity_results(spark, sf_correctness):
     which was the bulk of the suite runtime and what pushed the
     driver's pytest past its window (VERIFY_r09 ``tests_ok: false``).
     Set ``SPARK_GRAFT_PARITY_WORKERS=1`` to debug serially."""
+    import os
     from concurrent.futures import ThreadPoolExecutor
+
+    workers = int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS", "6"))
 
     def one(name: str) -> tuple[str, list[str]]:
         try:
@@ -67,7 +70,7 @@ def parity_results(spark, sf_correctness):
         except Exception as e:  # noqa: BLE001 — surface as that query's failure
             return name, [f"{name}: {type(e).__name__}: {e}"]
 
-    with ThreadPoolExecutor(max_workers=POOL_WORKERS) as pool:
+    with ThreadPoolExecutor(max_workers=workers) as pool:
         return dict(pool.map(one, _names()))
 
 

@@ -7,16 +7,15 @@ import subprocess
 import sys
 import textwrap
 
-from bigdataamazon_spark.session import default_driver_memory
+from bigdataamazon_spark.session import default_driver_memory, physical_memory_bytes
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_default_driver_memory_is_a_quarter_of_the_host_capped_at_16g():
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    mb = int(default_driver_memory().removesuffix("m"))
-    assert mb == min(phys // 4, 16 << 30) >> 20
-    assert mb << 20 < phys
+def test_default_driver_memory_fits_the_machine_and_the_cap():
+    heap = int(default_driver_memory().removesuffix("m")) << 20
+    assert 0 < heap < physical_memory_bytes()
+    assert heap <= 16 << 30
 
 
 def test_python_workers_import_engine_from_any_directory(sf_dir, tmp_path):

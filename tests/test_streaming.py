@@ -406,19 +406,50 @@ def test_upsert_batch_retains_two_versions(spark):
 
 def test_upsert_batch_empty_batch_writes_nothing(spark):
     """A micro-batch with no rows (a no-data batch that only evicts
-    watermark state) neither reads nor rewrites the snapshot."""
+    watermark state) neither reads nor rewrites the snapshot; only the
+    first batch, with no snapshot yet, writes an empty one."""
     import datetime
     import os
 
-    from bigdataamazon_spark.streaming.sinks import upsert_batch
+    from bigdataamazon_spark.streaming.sinks import read_snapshot, upsert_batch
 
     snap_dir = tempfile.mkdtemp(prefix="snap_empty_")
     try:
         t = datetime.datetime(2024, 1, 1, 12, 0, 0)
-        upsert_batch(_kv_batch(spark, [(1, t, "a")]), snap_dir, ["k"], "ts", 0)
-        upsert_batch(_kv_batch(spark, []), snap_dir, ["k"], "ts", 1)
-        assert sorted(os.listdir(snap_dir)) == ["_CURRENT", "v0"]
+        upsert_batch(_kv_batch(spark, []), snap_dir, ["k"], "ts", 0)
+        assert read_snapshot(spark, snap_dir).count() == 0
+        upsert_batch(_kv_batch(spark, [(1, t, "a")]), snap_dir, ["k"], "ts", 1)
+        upsert_batch(_kv_batch(spark, []), snap_dir, ["k"], "ts", 2)
+        assert sorted(os.listdir(snap_dir)) == ["_CURRENT", "v0", "v1"]
+        assert [(r.k, r.v) for r in read_snapshot(spark, snap_dir).collect()] == [(1, "a")]
     finally:
+        shutil.rmtree(snap_dir, ignore_errors=True)
+
+
+def test_upsert_batch_other_query_at_current_epoch_raises(spark):
+    """The replay guard skips an epoch only for the query that wrote it.
+    A query with a fresh checkpoint that reaches the epoch the pointer
+    names must neither drop its batch nor overwrite the version it
+    reads: it raises and the snapshot stays as it was."""
+    import datetime
+
+    import pytest
+
+    from bigdataamazon_spark.streaming.sinks import read_snapshot, upsert_batch
+
+    snap_dir = tempfile.mkdtemp(prefix="snap_owner_")
+    sc = spark.sparkContext
+    try:
+        t = datetime.datetime(2024, 1, 1, 12, 0, 0)
+        sc.setLocalProperty("sql.streaming.queryId", "query-a")
+        upsert_batch(_kv_batch(spark, [(1, t, "a")]), snap_dir, ["k"], "ts", 0)
+        upsert_batch(_kv_batch(spark, [(1, t, "a")]), snap_dir, ["k"], "ts", 0)  # replay
+        sc.setLocalProperty("sql.streaming.queryId", "query-b")
+        with pytest.raises(RuntimeError, match="belongs to one checkpoint"):
+            upsert_batch(_kv_batch(spark, [(2, t, "b")]), snap_dir, ["k"], "ts", 0)
+        assert [(r.k, r.v) for r in read_snapshot(spark, snap_dir).collect()] == [(1, "a")]
+    finally:
+        sc.setLocalProperty("sql.streaming.queryId", None)
         shutil.rmtree(snap_dir, ignore_errors=True)
 
 
