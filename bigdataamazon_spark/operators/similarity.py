@@ -604,13 +604,19 @@ def _lsh_shuffle_partitions(df: DataFrame, keyed_rows: int) -> int | None:
     236 s with sized partitions; BASELINE.md r08 2M receipt). Returns
     None (leave the session default) whenever the default is already
     enough, so plans below ~500k rows — and their pins, oracles, and
-    receipts — are byte-identical. Cluster reading: this is the
-    spill-aware `spark.sql.shuffle.partitions` rule applied PER
-    OPERATOR from the row count the routers already know, instead of
-    trusting one global default to fit every stage."""
+    receipts — are byte-identical. The default is the batch exchange
+    width: AQE's ``initialPartitionNum`` when set (it overrides
+    ``spark.sql.shuffle.partitions`` for AQE plans), else the latter.
+    Cluster reading: this is the spill-aware shuffle-partitions rule
+    applied PER OPERATOR from the row count the routers already know,
+    instead of trusting one global default to fit every stage."""
     import math
 
-    default = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    conf = df.sparkSession.conf
+    default = int(
+        conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum", None)
+        or conf.get("spark.sql.shuffle.partitions", "200")
+    )
     want = math.ceil(keyed_rows / 65_536)
     if want <= default:
         return None
@@ -1043,6 +1049,11 @@ def ivf_fit_centroids_local(
     corpus is bigger than an audit sample."""
     _guard_exact_corpus(df, max_rows, "ivf_fit_centroids_local")
     rows = df.select(id_col, vec_col).collect()
+    if not rows:
+        # empty corpus: np.array([]) is 1-D and k-means++ would draw
+        # from zero rows (cosine_topk guards the same way). No vector
+        # needs a cluster; return no centroids.
+        return np.empty((0, 0), dtype=np.float64)
     rows.sort(key=lambda r: r[0])  # collect order is not deterministic; id order is
     mat = np.array([r[1] for r in rows], dtype=np.float64)
     return _kmeans_local(mat, n_clusters, seed, max_iter)

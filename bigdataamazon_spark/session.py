@@ -5,8 +5,16 @@ but every knob is chosen to also be the right call on a real cluster:
 
 - AQE on (runtime coalesce, broadcast conversion, skew-join splitting) —
   at 100 TB the static plan is always wrong somewhere; AQE repairs it.
-- shuffle partitions sized to cores locally; on a cluster AQE's
-  ``coalescePartitions`` makes the initial number much less critical.
+- two shuffle widths, one per kind of plan. Batch plans run with AQE,
+  whose exchanges start at ``coalescePartitions.initialPartitionNum`` =
+  ``max(cpus, 8)`` and are coalesced at runtime. Streams run without
+  AQE (Spark disables it for stateful queries) and read
+  ``spark.sql.shuffle.partitions`` = ``cpus``, which the first batch
+  freezes into the checkpoint as the number of state partitions. Each
+  state partition pays a fixed cost per micro-batch (load the store,
+  write and commit a delta file), so one wave of cores is the cheapest
+  width locally. A restarted stream keeps the count its checkpoint
+  recorded.
 - Arrow on for any pandas_udf / toPandas hop.
 - session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle (and are deployment-independent).
@@ -68,9 +76,13 @@ def get_spark(app_name: str = DEFAULT_APP_NAME, *, ui: bool = False) -> SparkSes
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(max(cpus, 8)),
+        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

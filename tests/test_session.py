@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 import textwrap
@@ -43,3 +44,20 @@ def test_python_workers_import_engine_from_any_directory(sf_dir, tmp_path):
     assert "ModuleNotFoundError" not in out.stderr, out.stderr[-3000:]
     assert out.returncode == 0, out.stderr[-3000:]
     assert int(out.stdout.split("rows")[-1]) > 0
+
+
+def test_streams_get_one_wave_batch_plans_keep_their_width(spark):
+    """Streams freeze ``spark.sql.shuffle.partitions`` into their
+    checkpoint as the state-partition count: one per core. Batch plans
+    run under AQE and start from ``max(cpus, 8)`` exchange partitions."""
+    from pyspark.sql import functions as F
+
+    from bigdataamazon_spark.plans import final_plan
+    from bigdataamazon_spark.session import cpu_count
+
+    cpus = cpu_count()
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == cpus
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    plan = final_plan(df)
+    widths = re.findall(r"Exchange hashpartitioning\([^()]*, (\d+)\)", plan)
+    assert widths and {int(w) for w in widths} == {max(cpus, 8)}, plan

@@ -988,13 +988,14 @@ def test_dedup_state_survives_restart(spark, sf_dir, events_dir, tmp_path):
     )
 
 
-def test_windowed_agg_state_survives_restart(spark, sf_dir, events_dir, tmp_path):
-    """Windowed-agg partial state across a restart: phase 2 lands after
-    the stop, so windows straddling the phase boundary finish
-    accumulating in a RESTORED state store. Every sink row must equal
-    its batch-twin row (multiset exceptAll == 0 catches lost state,
-    double-emission, and double-written files), and every window the
-    final watermark closed must be present."""
+def _windowed_counts_across_restart(spark, events_dir, tmp_path, first_partitions=None):
+    """Run the first half of the events through the windowed stream,
+    stop, land the second half and restart from the checkpoint. Every
+    sink row must equal its batch-twin row (multiset exceptAll == 0
+    catches lost state, double-emission, and double-written files), and
+    every window the final watermark closed must be present. The first
+    run uses ``first_partitions`` shuffle partitions when given. Returns
+    the restarted query's last progress."""
     from pyspark.sql import functions as F
 
     from bigdataamazon_spark.streaming.windows import (
@@ -1022,10 +1023,16 @@ def test_windowed_agg_state_survives_restart(spark, sf_dir, events_dir, tmp_path
         )
 
     base.filter(F.col("ts") <= F.lit(split_ts)).repartition(2).write.parquet(src)
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
+    default_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    if first_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(first_partitions))
+    try:
+        q = start()
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination(30)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default_partitions)
 
     base.filter(F.col("ts") > F.lit(split_ts)).coalesce(1).write.mode(
         "append"
@@ -1045,3 +1052,23 @@ def test_windowed_agg_state_survives_restart(spark, sf_dir, events_dir, tmp_path
     )
     n_got, n_expected = got.count(), expected.count()
     assert n_got >= n_expected, f"{n_got} emitted vs {n_expected} closed windows"
+    return q2.lastProgress
+
+
+def test_windowed_agg_state_survives_restart(spark, sf_dir, events_dir, tmp_path):
+    """Windowed-agg partial state across a restart: phase 2 lands after
+    the stop, so windows straddling the phase boundary finish
+    accumulating in a RESTORED state store."""
+    _windowed_counts_across_restart(spark, events_dir, tmp_path)
+
+
+def test_windowed_checkpoint_keeps_its_state_partitions(spark, events_dir, tmp_path):
+    """A checkpoint written with 8 shuffle partitions (the session
+    default on hosts with fewer than 8 cores before streams got one
+    state partition per core) restarts under today's default with the
+    count it recorded, and its state is still whole."""
+    progress = _windowed_counts_across_restart(
+        spark, events_dir, tmp_path, first_partitions=8
+    )
+    ops = progress["stateOperators"]
+    assert ops and all(op["numShufflePartitions"] == 8 for op in ops), ops
